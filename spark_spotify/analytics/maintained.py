@@ -64,7 +64,7 @@ from spark_spotify.etl.pipeline import (
 from spark_spotify.functions.checkpoint import stable_checkpoint
 from spark_spotify.functions.concurrency import overlap
 from spark_spotify.operators.dedup import corpus_index, incremental_near_dups
-from spark_spotify.sources.tables import fan_out, load_table
+from spark_spotify.sources.tables import fan_out, load_table, read_parquet
 
 
 def _vec_view(df: DataFrame) -> DataFrame:
@@ -173,8 +173,8 @@ def _added_parts_read(
         p for p in (_manifest(warehouse, table, v_to) or []) if p not in before
     ]
     _require(bool(added), f"{table}: no parts added in ({v_from}, {v_to}]")
-    return spark.read.parquet(
-        *[os.path.join(warehouse, table, p) for p in added]
+    return read_parquet(
+        spark, *[os.path.join(warehouse, table, p) for p in added]
     )
 
 
@@ -755,7 +755,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     land(emb.filter(~_ann_late()), "b1")
     # frozen quantizer from the first arrival, committed up front
-    first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
+    first = _vec_view(read_parquet(spark, os.path.join(src, "b1.parquet")))
     _commit_append(
         first.filter(F.col("vec_id") < N_CELLS).select(
             F.col("vec_id").alias("cent_id"),
@@ -820,7 +820,7 @@ def q_stream_ann_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     _require(applied == before, "idle restart re-applied batches")
     idx_parts = _manifest(base, "ann_index") or []
     n_idx = _part_rows(base, "ann_index", idx_parts)
-    corpus = _vec_view(fan_out(spark.read.parquet(src)))
+    corpus = _vec_view(fan_out(read_parquet(spark, src)))
     n_corpus = _part_rows(base, "arrivals", [""])  # all files under src
     _require(
         n_idx == n_corpus,
@@ -899,7 +899,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.rename(part, os.path.join(src, f"{name}.parquet"))
 
     land(emb.filter(~late1 & ~late2), "b1")
-    first = _vec_view(spark.read.parquet(os.path.join(src, "b1.parquet")))
+    first = _vec_view(read_parquet(spark, os.path.join(src, "b1.parquet")))
     _commit_append(_centroid_rows(first), base, "ann_centroids", 1)
     applied: dict = {}
 
@@ -969,7 +969,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the running index is untouched (sealed epoch-1 segments)
     from spark_spotify.etl.pipeline import swing_rebase
 
-    all_v = _vec_view(fan_out(spark.read.parquet(src)))
+    all_v = _vec_view(fan_out(read_parquet(spark, src)))
     all_v.filter(
         (F.col("vec_id") >= N_CELLS) & (F.col("vec_id") < hi)
     ).select(
@@ -995,7 +995,7 @@ def q_stream_ann_retrain_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # landed arrival files' parquet footers (1:1 projection — no
     # filters, no DVs), so only the per-epoch histogram needs a job.
     idx = read_table(spark, base, "ann_index")
-    corpus = _vec_view(fan_out(spark.read.parquet(src)))
+    corpus = _vec_view(fan_out(read_parquet(spark, src)))
     n_corpus = _dir_rows(src)
     ep_rows = (
         idx.groupBy("epoch")
@@ -2504,7 +2504,7 @@ def q_stream_ann_auto_retrain(
         os.rename(part, os.path.join(src, f"{name}.parquet"))
 
     land(emb.select("vec_id", F.expr(E_SQL).alias("emb")), "b0")
-    first = spark.read.parquet(os.path.join(src, "b0.parquet"))
+    first = read_parquet(spark, os.path.join(src, "b0.parquet"))
     base1 = _rt_view(fan_out(first))
 
     # The frozen v1 quantizer commit (trained on batch 0 alone —
@@ -2685,7 +2685,7 @@ def q_stream_ann_auto_retrain(
         # side's n/sum plus the per-cell occupancy join): the ≤2·cells
         # collected rows finish the identical integer arithmetic
         # driver-side — exact longs either way, same values.
-        cur = sess.read.parquet(os.path.join(base, "ann_index", part))
+        cur = read_parquet(sess, os.path.join(base, "ann_index", part))
         idx = read_table(sess, base, "ann_index")
         sides = cur.select(F.lit(1).alias("side"), "cell", "mc_s6")
         if idx is not None:

@@ -32,7 +32,12 @@ from spark_spotify.operators.dedup import (
     signatures,
 )
 from spark_spotify.operators.simhash import simhash_near_dups
-from spark_spotify.sources.tables import fan_out, load_table, table_rows
+from spark_spotify.sources.tables import (
+    fan_out,
+    load_table,
+    read_parquet,
+    table_rows,
+)
 
 EMB_COSINE_THRESHOLD = 0.35
 
@@ -98,7 +103,7 @@ def _corpus_index_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(_INDEX_CACHE[sf_dir])
     except OSError:
         pass
-    return spark.read.parquet(_INDEX_CACHE[sf_dir])
+    return read_parquet(spark, _INDEX_CACHE[sf_dir])
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

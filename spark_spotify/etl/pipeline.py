@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import os
 import time
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -44,7 +45,7 @@ from spark_spotify.etl.fact import fact_from
 from spark_spotify.etl.silver import clean_events
 from spark_spotify.etl.stats import daily_stats
 from spark_spotify.operators.merge import merge_upsert
-from spark_spotify.sources.tables import load_table
+from spark_spotify.sources.tables import load_table, read_parquet
 
 TABLES = (
     "bronze",
@@ -129,17 +130,6 @@ def _manifest(
         return None
     v = vs[-1] if version is None else version
     return _read_manifest_file(warehouse, table, v)["parts"]
-
-
-def _renames(
-    warehouse: str, table: str, version: int | None = None
-) -> dict[str, str]:
-    """Column mapping ``{physical_name: logical_name}`` at ``version``."""
-    vs = _versions(warehouse, table)
-    if not vs:
-        return {}
-    v = vs[-1] if version is None else version
-    return _read_manifest_file(warehouse, table, v)["renames"]
 
 
 # Delta truncates string file-stats at 32 chars (prefix + increment); we
@@ -742,35 +732,40 @@ def _part_branches(
     single-source-only and must not sit above the union) can map each
     branch before combining.
 
-    ``schema`` is the manifest's TABLE-OWNED physical schema (JSON, set
-    by schema-evolving commits).  When present the scan is planned from
-    it — parquet fills columns a file lacks with NULL — which is how
-    Delta/Iceberg read mixed-schema part sets: zero footer-merging I/O
-    at plan time (``mergeSchema`` would read every footer of a 100 TB
-    table), and the schema is versioned with the snapshot."""
+    Every branch is planned from a known schema, from one of two
+    sources:
+
+    - ``schema``, the manifest's TABLE-OWNED physical schema (JSON, set
+      by schema-evolving commits).  When present the scan is planned
+      from it — parquet fills columns a file lacks with NULL — which is
+      how Delta/Iceberg read mixed-schema part sets: zero footer-merging
+      I/O at plan time (``mergeSchema`` would read every footer of a
+      100 TB table), and the schema is versioned with the snapshot.
+    - otherwise :func:`read_parquet`, which takes the schema Spark
+      itself would infer from the parts' footers (the Spark schema JSON
+      every part written here carries) without an inference job; a
+      hive-partitioned part falls through to Spark's own partition
+      discovery there."""
     if not parts:
         return []
     specs = specs or {}
     tdir = os.path.join(warehouse, table)
     plain = [p for p in parts if p not in specs]
-    reader = spark.read
     if schema is not None:
         import json as _json
 
         from pyspark.sql.types import StructType
 
-        reader = spark.read.schema(
+        open_ = spark.read.schema(
             StructType.fromJson(_json.loads(schema))
-        )
+        ).parquet
+    else:
+        open_ = partial(read_parquet, spark)
     branches = []
     if plain:
-        branches.append(
-            reader.parquet(*[os.path.join(tdir, p) for p in plain])
-        )
+        branches.append(open_(*[os.path.join(tdir, p) for p in plain]))
     branches.extend(
-        reader.parquet(os.path.join(tdir, p))
-        for p in parts
-        if p in specs
+        open_(os.path.join(tdir, p)) for p in parts if p in specs
     )
     return branches
 
@@ -834,7 +829,7 @@ def _read_parts_live(
             out0 = b if out0 is None else out0.unionByName(b)
         return out0
     names = sorted({n for ns in live.values() for n in ns})
-    dvdf = spark.read.parquet(*[os.path.join(tdir, n) for n in names])
+    dvdf = read_parquet(spark, *[os.path.join(tdir, n) for n in names])
     rel = _rel_file_expr(tdir)
     out = None
     for br in _part_branches(
@@ -1719,8 +1714,8 @@ def run_incremental_etl(
     _commit_append(clean_events(novel), warehouse, "silver", batch_id)
     # the just-written silver part IS the cleaned delta — read it back for
     # the fact build instead of re-deriving clean_events a second time
-    silver_delta = spark.read.parquet(
-        os.path.join(warehouse, "silver", f"p{batch_id}")
+    silver_delta = read_parquet(
+        spark, os.path.join(warehouse, "silver", f"p{batch_id}")
     )
 
     du_delta = novel.groupBy("user_id").agg(
@@ -1859,8 +1854,8 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         # a commit can legitimately add nothing (all events at or
         # before the cut) — the change feed is empty, not an error
         return read_table(spark, warehouse, "fact").limit(0)
-    return spark.read.parquet(
-        *[os.path.join(warehouse, "fact", p) for p in added]
+    return read_parquet(
+        spark, *[os.path.join(warehouse, "fact", p) for p in added]
     )
 
 
@@ -2903,7 +2898,7 @@ def _enforce_constraints(
     m = _read_manifest_file(warehouse, table, cur)
     if not m["constraints"] and not m["generated"]:
         return
-    df = spark.read.parquet(os.path.join(warehouse, table, part))
+    df = read_parquet(spark, os.path.join(warehouse, table, part))
     if m["drops"]:
         df = df.drop(*m["drops"])
     for phys, logical in m["renames"].items():
@@ -3523,8 +3518,9 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         _link_fact_into(warehouse, list(v1), cw)
         manifest = list(v1)
         if new_parts:
-            delta = spark.read.parquet(
-                *[os.path.join(warehouse, "fact", p) for p in new_parts]
+            delta = read_parquet(
+                spark,
+                *[os.path.join(warehouse, "fact", p) for p in new_parts],
             ).withColumn("ingest_source", F.lit("batch2"))
             delta.coalesce(APPEND_WRITE_FILES).write.mode(
                 "overwrite"
@@ -4126,9 +4122,7 @@ def _delete_rows_mor(
     live_dv = {p: ns for p, ns in dv.items() if ns}
     if live_dv:
         names = sorted({n for ns in live_dv.values() for n in ns})
-        old = spark.read.parquet(
-            *[os.path.join(tdir, n) for n in names]
-        )
+        old = read_parquet(spark, *[os.path.join(tdir, n) for n in names])
         probe = probe.join(F.broadcast(old), ["f", "i"], "left_anti")
     # NO coalesce(1): it would collapse the probe SCAN into one task —
     # the sidecar may span a few files, the read path unions them anyway
@@ -4137,7 +4131,7 @@ def _delete_rows_mor(
     # input, part-count-bounded output
     affected = sorted(
         r["p"]
-        for r in spark.read.parquet(os.path.join(tdir, dvname))
+        for r in read_parquet(spark, os.path.join(tdir, dvname))
         .select(F.split("f", "/").getItem(0).alias("p"))
         .distinct()
         .collect()
@@ -4290,14 +4284,14 @@ def delete_where(
         }
         if live_dv:
             names = sorted({n for ns in live_dv.values() for n in ns})
-            old = spark.read.parquet(
-                *[os.path.join(tdir, n) for n in names]
+            old = read_parquet(
+                spark, *[os.path.join(tdir, n) for n in names]
             )
             probe = probe.join(F.broadcast(old), ["f", "i"], "left_anti")
         probe.write.parquet(os.path.join(tdir, dvname))
         dv_parts = sorted(
             r["p"]
-            for r in spark.read.parquet(os.path.join(tdir, dvname))
+            for r in read_parquet(spark, os.path.join(tdir, dvname))
             .select(F.split("f", "/").getItem(0).alias("p"))
             .distinct()
             .collect()
@@ -5138,7 +5132,7 @@ def _merge_rows_mor(
         *[_upd(c) for c in out_cols],
     ).write.parquet(stage)
     try:
-        st = spark.read.parquet(stage)
+        st = read_parquet(spark, stage)
         claimed = st.filter(F.col("_action") != KEEP)
         # vectorize every claimed row (update AND delete): its old image
         # must disappear from the old part's reads
@@ -5148,7 +5142,7 @@ def _merge_rows_mor(
         ).coalesce(1).write.parquet(os.path.join(tdir, dvname))
         dv_parts = sorted(
             r["p"]
-            for r in spark.read.parquet(os.path.join(tdir, dvname))
+            for r in read_parquet(spark, os.path.join(tdir, dvname))
             .select(F.split("f", "/").getItem(0).alias("p"))
             .distinct()
             .collect()
@@ -5768,8 +5762,8 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         _link_fact_into(warehouse, v1, cw)
         _swing(cw, "fact", list(v1))  # v1: legacy unpartitioned spec
-        delta = spark.read.parquet(
-            *[os.path.join(warehouse, "fact", p) for p in batch2]
+        delta = read_parquet(
+            spark, *[os.path.join(warehouse, "fact", p) for p in batch2]
         )
         delta.write.partitionBy("date_key").parquet(
             os.path.join(cw, "fact", "q2")
@@ -5867,8 +5861,8 @@ def wap_publish(
                 ),
                 f"promotion target {name!r} collides with an existing part",
             )
-        staged = spark.read.parquet(
-            *[os.path.join(tdir, p) for p in staged_parts]
+        staged = read_parquet(
+            spark, *[os.path.join(tdir, p) for p in staged_parts]
         )
         # the audit's probes — null key, intra-staging duplicate,
         # CHECK/generated violation, already-published key — are

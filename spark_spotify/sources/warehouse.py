@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from spark_spotify.sources.tables import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -46,7 +48,7 @@ def write_partitioned(
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Scan a partitioned warehouse table; partition-column predicates on
     the result prune directories (PartitionFilters), not just row groups."""
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_bucketed(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from spark_spotify.session import pin_session
-from spark_spotify.sources.tables import normalize_event_ts
+from spark_spotify.sources.tables import normalize_event_ts, read_parquet
 
 WATERMARK_DELAY = "10 minutes"
 
@@ -46,7 +46,7 @@ def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pin_session(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    file_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    file_schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     # file streaming sources take a directory; target the single events file
     raw = (
         spark.readStream.schema(file_schema)
@@ -465,7 +465,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
             dest = os.path.join(stream_dir, f"{name}.parquet")
             shutil.move(os.path.join(tmp, part), dest)
             os.utime(dest, (mtime, mtime))  # pin file-source order
-        schema = spark.read.parquet(stream_dir).schema
+        schema = read_parquet(spark, stream_dir).schema
         raw = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
@@ -1246,7 +1246,7 @@ def q_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drift report over the re-aggregated monitor counts: the sink may
     # have cut a wave across any number of batches — the sums agree
     cw = (
-        spark.read.parquet(counts_dir)
+        read_parquet(spark, counts_dir)
         .groupBy("wave", "bucket")
         .agg(F.sum("n").alias("n"))
     )
@@ -1393,13 +1393,13 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     if not state["main"] or not state["dlq"]:
         # zero micro-batches (empty source): an empty result, not a
-        # spark.read.parquet(*[]) crash
+        # read_parquet(spark, *[]) crash
         return spark.createDataFrame(
             [],
             "route string, corruption string, n_rows bigint, sum_k bigint",
         )
     main = (
-        spark.read.parquet(*state["main"])
+        read_parquet(spark, *state["main"])
         .groupBy("corruption")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
@@ -1408,7 +1408,7 @@ def q_stream_dlq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("main").alias("route"), "corruption", "n_rows", "sum_k")
     )
     dlq = (
-        spark.read.parquet(*state["dlq"])
+        read_parquet(spark, *state["dlq"])
         .groupBy("corruption")
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .select(

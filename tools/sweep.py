@@ -1,5 +1,7 @@
 """Full driver-style correctness sweep: every registered query vs its
-DuckDB oracle at sf0.01.  Prints one status line per query and a summary.
+DuckDB oracle at sf0.01.  Prints one status line per query, with the
+number of Spark jobs the query ran (factory plus materialisation, from the
+scheduler's job counter), and a summary with the sweep's job total.
 
 Usage: python tools/sweep.py [sf_dir] [query_prefix ...]
 """
@@ -17,6 +19,11 @@ from spark_spotify.session import get_spark  # noqa: E402
 from tests.oracle import compare  # noqa: E402
 
 
+def _jobs(spark) -> int:
+    """Spark jobs started so far in this application."""
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     prefixes = tuple(sys.argv[2:])
@@ -24,23 +31,32 @@ def main() -> int:
     queries = entry.queries()
     oracles = entry.oracle_sql()
     fails, errs, skipped = [], [], []
+    total_jobs = 0
     t_all = time.time()
     for name, fn in queries.items():
         if prefixes and not name.startswith(prefixes):
             continue
         t0 = time.time()
+        j0 = _jobs(spark)
         try:
             df = fn(spark, sf_dir)
             if name not in oracles:
                 n = df.count()
-                print(f"ROWS-ONLY {name}: {n} rows  ({time.time()-t0:.1f}s)")
+                jobs = _jobs(spark) - j0
+                total_jobs += jobs
+                print(
+                    f"ROWS-ONLY {name}: {n} rows  jobs={jobs}  "
+                    f"({time.time()-t0:.1f}s)"
+                )
                 skipped.append(name)
                 continue
             rep = compare(df, oracles[name], sf_dir)
+            jobs = _jobs(spark) - j0
+            total_jobs += jobs
             status = "PASS" if rep["ok"] else "FAIL"
             print(
                 f"{status} {name}: {rep['rows_spark']}/{rep['rows_oracle']} "
-                f"rows  ({time.time()-t0:.1f}s)"
+                f"rows  jobs={jobs}  ({time.time()-t0:.1f}s)"
             )
             if not rep["ok"]:
                 fails.append(name)
@@ -48,14 +64,17 @@ def main() -> int:
                     print(f"   {e[:400]}")
         except Exception:
             errs.append(name)
-            print(f"ERR  {name}  ({time.time()-t0:.1f}s)")
+            jobs = _jobs(spark) - j0
+            total_jobs += jobs
+            print(f"ERR  {name}  jobs={jobs}  ({time.time()-t0:.1f}s)")
             traceback.print_exc(limit=3)
     n_checked = len(
         [q for q in queries if (not prefixes or q.startswith(prefixes))]
     )
     print(
         f"\n=== {n_checked} run, {len(fails)} FAIL, {len(errs)} ERR, "
-        f"{len(skipped)} rows-only in {time.time()-t_all:.0f}s ==="
+        f"{len(skipped)} rows-only, {total_jobs} Spark jobs "
+        f"in {time.time()-t_all:.0f}s ==="
     )
     if fails:
         print("FAILS:", fails)
